@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Bucketed persistence for the exploded blocking-key table — the
   * "bucketed hash joins on blocking keys" half of the candidate-
-  * generation contract (the salted half lives in Pipeline's grid
-  * salting).
+  * generation contract (the salted half lives in Pipeline.blockJoin).
   *
   * Why it matters at 10^12 documents: candidate generation re-runs
   * continuously (every crawl increment re-blocks against the standing
@@ -16,7 +15,9 @@ import org.apache.spark.sql.functions._
   * every incremental join of newly crawled keys bucketed the same way
   * — exchange-free: the scan itself delivers co-partitioned buckets,
   * so the join starts from local sorts instead of a corpus-wide
-  * shuffle (BucketedJoinSpec asserts zero Exchange nodes in the plan).
+  * shuffle (BucketedJoinSpec asserts zero Exchange nodes in the
+  * self-join plan; IncrementalErSpec pins the incremental join to the
+  * increment's exchange alone).
   * The steady-state cost of re-blocking drops from O(corpus shuffle)
   * to O(new-data shuffle).
   *
@@ -242,19 +243,5 @@ object BucketedKeyTable {
     a.join(b, Seq("key"))
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
-  }
-
-  /** Incremental blocking join: newly crawled keyed mentions against
-    * the standing bucketed corpus. Only the NEW side shuffles (one
-    * Exchange, on `newKeyed`, to match the table's bucket
-    * distribution — spec-asserted); the standing table is read in
-    * place. This is the steady-state candidate-generation cost model:
-    * O(increment), not O(corpus). Returns (id_a = standing id,
-    * id_b = new id) per shared key. */
-  def incrementalJoinPairs(spark: SparkSession, table: String,
-      newKeyed: DataFrame): DataFrame = {
-    val standing = spark.table(table).select(col("key"), col("id").as("id_a"))
-    val fresh = newKeyed.select(col("key"), col("id").as("id_b"))
-    standing.join(fresh, Seq("key")).select("id_a", "id_b")
   }
 }

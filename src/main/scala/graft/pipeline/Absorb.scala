@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,7 +71,14 @@ object Absorb {
     *    table's key column every batch (the round-6 O(corpus)-per-batch
     *    residual). Spec contract: ≡ recomputing the census from the
     *    table at any batch boundary;
-    *  - `batches`: absorbed-batch count (drives norm compaction). */
+    *  - `batches`: absorbed-batch count (drives norm compaction).
+    *
+    * Lifetime: `labels` and `census` are eager checkpoints that
+    * [[Absorb.absorb]] releases once their successors exist. After the
+    * next batch is absorbed, the previous Standing's `labels` and
+    * `census` DataFrames (and its `norm`, on a batch that compacts it)
+    * are unreadable: their checkpoint blocks are gone and cannot be
+    * recomputed. Read what you need from them before absorbing again. */
   final case class Standing(table: String, norm: DataFrame, labels: DataFrame,
       census: DataFrame, batches: Int = 0)
 
@@ -90,12 +99,15 @@ object Absorb {
     try df.queryExecution.analyzed.foreach {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
       case _ => ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
   /** Per-batch absorb output: the advanced standing state, this
     * batch's accepted edges (canonical id_a < id_b, code, score), and
     * the lazily-evaluated component-size histogram of the updated
-    * labels (the over-merge monitor). */
+    * labels (the over-merge monitor). `componentStats` reads
+    * `standing.labels`, so it — like the labels and census — becomes
+    * unreadable once the next batch is absorbed (see [[Standing]]);
+    * `newEdges` is its own checkpoint and stays readable. */
   final case class BatchResult(standing: Standing, newEdges: DataFrame,
       componentStats: DataFrame)
 

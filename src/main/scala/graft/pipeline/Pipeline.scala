@@ -18,14 +18,11 @@ import graft.pages.Extract
   *  - normalization runs once per DISTINCT raw name and is joined back
   *    (match_pair.py:28-30's memo dict, relationally) — at web scale
   *    distinct names ≪ mentions;
-  *  - candidate generation is an equi-join on exploded blocking keys,
-  *    never a cross product; pair dedup keys on (idA, idB);
-  *  - oversized blocks (stop-word-like keys) are SALT-SPLIT into
-  *    bounded (key, salt) sub-blocks so every pair is still scored
-  *    (matcher.py:381-396 scores every pair) without any task
-  *    materializing a whole hot block; only runaway blocks above a
-  *    hard bound are dropped, counted, and logged — never silently;
-  *    AQE skew-join remains on as the second line of defense;
+  *  - candidate generation is ONE tiered equi-join on exploded
+  *    blocking keys ([[blockJoin]]: small blocks direct, hot blocks
+  *    salt-split, runaway blocks dropped and counted), never a cross
+  *    product; pair dedup keys on (idA, idB); AQE skew-join remains on
+  *    as the second line of defense;
   *  - the cheap token_set_ratio prefilter (cutoff 50, matcher.py:33)
   *    runs before the cascade inside the same codegen stage, so >90%
   *    of candidates never reach the 230-rule scorer.
@@ -35,16 +32,10 @@ object Pipeline {
   final case class Config(
       cutoff: Int = 50,
       removePeople: Boolean = true,
-      // a block of n rows yields O(n²) pairs: 200 ⇒ ≤19.9k pairs per
-      // un-salted block. Blocks ABOVE this are SALT-SPLIT into
-      // ceil(n/cap) `(key, salt)` sub-blocks (every pair still
-      // generated — the reference scores every pair, matcher.py:381-396
-      // — but no single task ever materializes a whole hot block).
+      // blocking-join tier bounds (see [[Pipeline.blockJoin]]): blocks
+      // above maxBlockSize rows are salt-split, blocks above
+      // runawayBlockSize rows are dropped and counted
       maxBlockSize: Int = 200,
-      // hard runaway bound: a block above this is DROPPED with logged
-      // counts (4000 rows ⇒ ~8M pairs from ONE key — at web scale such
-      // keys are stop-word-like artifacts whose pairs are noise, and
-      // their O(n²) output would dominate the job).
       runawayBlockSize: Int = 4000,
       ccMaxIter: Int = 30,
       // postproc-ppl.py:15-24 — drop person-looking rows from the
@@ -152,102 +143,121 @@ object Pipeline {
   private def maybeBroadcast(df: DataFrame, cfg: Config): DataFrame =
     if (cfg.broadcastNames) broadcast(df) else df
 
-  /** Hot-key census with the per-key salt count: keys in
-    * (maxBlockSize, runawayBlockSize] are salted into
-    * nsalt = ceil(block_size / maxBlockSize) sub-blocks; keys above
-    * the runaway bound are dropped (logged via the observe deltas). */
-  private def saltPlan(sizes: DataFrame, cfg: Config): DataFrame =
-    sizes
-      .where(col("block_size") > cfg.maxBlockSize &&
-        col("block_size") <= cfg.runawayBlockSize)
-      .withColumn("nsalt",
-        ceil(col("block_size").cast("double") / cfg.maxBlockSize).cast("long"))
-      .select("key", "nsalt")
-
-  /** Distinct (id_a, id_b) self-pairs from a keyed table (id, key) —
-    * the in-plan blocking join, exposed for spec-level recall proofs.
+  /** The blocking join: the one operator behind every candidate-pair
+    * path (self, two-sided, and the incremental hot-key route). Sides
+    * are keyed tables `a` = (key, id_a[, nos_a][, w]) and
+    * `b` = (key, id_b[, nos_b][, w]). The per-key census
+    * ([[blockSizes]]: rows, or summed `w`) is in-plan (no driver
+    * action); with `self` the two sides are the same rows and the one
+    * census is shared. Three tiers per key, by block sizes bs_a, bs_b:
+    *  - both ≤ maxBlockSize: plain SHUFFLE_HASH join on key. A
+    *    broadcast join here would inherit the (possibly AQE-coalesced,
+    *    single-partition) probe side's parallelism and serialize
+    *    everything downstream;
+    *  - either side hot and bs_b ≤ runawayBlockSize: 2-D GRID SALT.
+    *    `a` rows carry salt_m = hash(id_a) mod n_a and are replicated
+    *    to every salt_b; `b` rows carry salt_b = hash(id_b) mod n_b and
+    *    are replicated to every salt_m (n = ceil(bs / maxBlockSize)).
+    *    The join on (key, salt_m, salt_b) meets each pair exactly once,
+    *    at (salt_m(a), salt_b(b)): every pair of a hot block is still
+    *    produced (the reference scores every pair, matcher.py:381-396),
+    *    while per-task work stays bounded by maxBlockSize² whatever
+    *    either side's block size. Replication is |a|·n_b + |b|·n_a
+    *    rows, linear in each side. (A 1-D salt's cap × block_size
+    *    cells, up to 800k pairs at the runaway bound, were measured as
+    *    multi-second stragglers on dense family blocks.) In self mode
+    *    the pair {x,y} meets as (x,y) and as (y,x); id_a < id_b keeps
+    *    one;
+    *  - bs_b > runawayBlockSize: dropped (4000 rows ⇒ ~8M pairs from
+    *    ONE key; at web scale such keys are stop-word-like artifacts
+    *    whose pairs are noise). In two-sided mode `a` has no runaway
+    *    bound (big main keys are real data).
     *
-    * Three key tiers (census is in-plan, no driver action):
-    *  - block_size ≤ maxBlockSize: plain SHUFFLE_HASH self-join on key;
-    *  - maxBlockSize < block_size ≤ runawayBlockSize: 2-D GRID SALT —
-    *    each side is salted by its own hash and replicated across the
-    *    other axis; the join runs on (key, salt_m, salt_b): every pair
-    *    of the hot block is still produced exactly once (the reference
-    *    scores every pair, matcher.py:381-396), with per-task work
-    *    bounded by maxBlockSize² regardless of block size — the
-    *    "top-key splitting" of the north rule;
-    *  - block_size > runawayBlockSize: dropped, counted, logged.
+    * With `earlyFilter` both sides carry nos_* and the cheap
+    * token_set_ratio prefilter runs INSIDE each tier's join, before
+    * the pair dedup (see [[edgeCandidatesSelf]]).
     *
-    * With `earlyFilter` the keyed table must also carry `nosuffix` and
-    * the cheap token_set_ratio prefilter runs INSIDE each tier's join,
-    * before the pair-dedup `distinct()` — see [[edgeCandidatesSelf]]
-    * for why that ordering is the 100 TB shape.
-    */
-  def candidatePairsSelf(keyed0: DataFrame, cfg: Config = Config(),
-      cacheKeyed: Boolean = true, earlyFilter: Boolean = false): DataFrame = {
-    // the keyed table is consumed ~6× below (census for the anti-join,
-    // census for the salt plan, both small-join sides, the hot join's
-    // two sides) and each uncached scan re-evaluates the blocking_keys
-    // explode (double-metaphone + minhash per row — the expensive
-    // part). (id, key) rows are ~30 bytes: persist them once. Callers
-    // that rebuild per micro-batch pass cacheKeyed = false and manage
-    // caching themselves (a per-batch CacheManager entry never
-    // released would grow without bound).
-    val keyed = if (cacheKeyed) keyed0.persist() else keyed0
-    val sizes = blockSizes(keyed)
-    val oversize = sizes.where(col("block_size") > cfg.maxBlockSize)
-    val small = keyed.join(broadcast(oversize.select("key")), Seq("key"), "left_anti")
-      .observe("graft_capped_rows", count(lit(1)).as("rows_kept"))
-    def sideA(df: DataFrame, extra: Column*): DataFrame =
-      if (earlyFilter)
-        df.select(Seq(col("key"), col("id").as("id_a"),
-          col("nosuffix").as("nos_a")) ++ extra: _*)
-      else df.select(Seq(col("key"), col("id").as("id_a")) ++ extra: _*)
-    def sideB(df: DataFrame, extra: Column*): DataFrame =
-      if (earlyFilter)
-        df.select(Seq(col("key"), col("id").as("id_b"),
-          col("nosuffix").as("nos_b")) ++ extra: _*)
-      else df.select(Seq(col("key"), col("id").as("id_b")) ++ extra: _*)
+    * Returns the UNION ALL of the tiers' (id_a, id_b): a pair sharing
+    * several keys appears once per key, and the caller owns the one
+    * terminal `distinct()` — on the 16-byte id pair, before any name
+    * is joined back (at web scale the duplicate-key traffic is the
+    * dominant shuffle). Observations: `graft_capped_rows`
+    * (small-tier rows) and `graft_salted_pairs` in self mode,
+    * `graft_salted_pairs_2s` in two-sided mode — distinct names,
+    * because Absorb unions both modes into one plan and Spark rejects
+    * two observations of one name in a plan. */
+  private def blockJoin(a: DataFrame, b: DataFrame, cfg: Config,
+      self: Boolean, earlyFilter: Boolean): DataFrame = {
+    val cap = cfg.maxBlockSize
+    val sizesA = blockSizes(a).withColumnRenamed("block_size", "bs_a")
+    val sizes =
+      if (self) sizesA.withColumn("bs_b", col("bs_a"))
+      else sizesA.join(blockSizes(b).withColumnRenamed("block_size", "bs_b"),
+        Seq("key"), "full_outer").na.fill(0L)
+    val oversize = sizes.where(col("bs_a") > cap || col("bs_b") > cap)
+    val grid = oversize
+      .where(col("bs_a") > 0 && col("bs_b").between(1, cfg.runawayBlockSize))
+      .select(col("key"),
+        ceil(col("bs_a").cast("double") / cap).cast("long").as("n_a"),
+        ceil(col("bs_b").cast("double") / cap).cast("long").as("n_b"))
     val keep =
-      if (earlyFilter)
-        col("id_a") < col("id_b") &&
+      (if (self) col("id_a") < col("id_b") else lit(true)) &&
+        (if (earlyFilter)
           gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff)
-      else col("id_a") < col("id_b")
-    // SHUFFLE_HASH: the designed bucketed hash join on blocking keys.
-    // A broadcast join here would inherit the (possibly AQE-coalesced,
-    // single-partition) left side's parallelism and serialize
-    // everything downstream. Pair dedup runs on the 16-byte id pair
-    // BEFORE the name strings are joined back — at web scale the
-    // duplicate-key traffic is the dominant shuffle.
-    val smallPairs = sideA(small).join(sideB(small).hint("SHUFFLE_HASH"), Seq("key"))
+        else lit(true))
+
+    // the join payload: key, id and (earlyFilter) the prefilter
+    // operand — nothing else (the census weight, caller columns) may
+    // ride into a join exchange
+    def payload(side: DataFrame, s: String): DataFrame = side.select(
+      (Seq("key", s"id_$s") ++ (if (earlyFilter) Seq(s"nos_$s") else Nil)).map(col): _*)
+    val (pa, pb) = (payload(a, "a"), payload(b, "b"))
+
+    def small(side: DataFrame): DataFrame =
+      side.join(broadcast(oversize.select("key")), Seq("key"), "left_anti")
+    val smallA =
+      if (self) small(pa).observe("graft_capped_rows", count(lit(1)).as("rows_kept"))
+      else small(pa)
+    val smallPairs = smallA.join(small(pb).hint("SHUFFLE_HASH"), Seq("key"))
       .where(keep)
       .select("id_a", "id_b")
-    // salted tier — 2-D grid: the A side carries salt_m = hash(id) mod
-    // n and is replicated across every salt_b; the B side carries
-    // salt_b and is replicated across every salt_m. An unordered pair
-    // {x,y} appears as (x,y) at cell (salt_m(x), salt_b(y)) and as
-    // (y,x) at (salt_m(y), salt_b(x)); the id_a < id_b filter keeps
-    // exactly one. Per-task work is bounded by maxBlockSize² — the 1-D
-    // scheme's cap × block_size cells (up to 800k pairs at the runaway
-    // bound) were measured as multi-second stragglers on dense
-    // family blocks.
-    val hotKeyed = keyed.join(broadcast(saltPlan(sizes, cfg)), Seq("key"))
-    val hotA = sideA(hotKeyed,
-      pmod(xxhash64(col("id")), col("nsalt")).as("salt_m"),
-      explode(sequence(lit(0L), col("nsalt") - 1)).as("salt_b"))
-    val hotB = sideB(hotKeyed,
-      explode(sequence(lit(0L), col("nsalt") - 1)).as("salt_m"),
-      pmod(xxhash64(col("id")), col("nsalt")).as("salt_b"))
-    val hotPairs = hotA.join(hotB.hint("SHUFFLE_HASH"),
+
+    def salt(id: String, n: String): Column = pmod(xxhash64(col(id)), col(n))
+    def fan(n: String): Column = explode(sequence(lit(0L), col(n) - 1))
+    def onGrid(side: DataFrame, saltM: Column, saltB: Column): DataFrame =
+      side.join(broadcast(grid), Seq("key"))
+        .select(side.columns.map(col) :+ saltM.as("salt_m") :+ saltB.as("salt_b"): _*)
+    val hotPairs = onGrid(pa, salt("id_a", "n_a"), fan("n_b"))
+      .join(onGrid(pb, fan("n_a"), salt("id_b", "n_b")).hint("SHUFFLE_HASH"),
         Seq("key", "salt_m", "salt_b"))
       .where(keep)
       .select("id_a", "id_b")
-      .observe("graft_salted_pairs", count(lit(1)).as("pairs_salted"))
-    smallPairs.unionByName(hotPairs).distinct()
+      .observe(if (self) "graft_salted_pairs" else "graft_salted_pairs_2s",
+        count(lit(1)).as("pairs_salted"))
+    smallPairs.unionByName(hotPairs)
   }
 
-  /** Self-join candidate pairs over blocking keys (salted hot keys,
-    * runaway drop — see [[candidatePairsSelf]]). Returns
+  /** Distinct (id_a, id_b) self-pairs, id_a < id_b, of a keyed table
+    * (id, key[, nosuffix][, w]): [[blockJoin]] in self mode, deduped.
+    * With `earlyFilter` the table must carry `nosuffix` and the
+    * prefilter runs inside the join.
+    *
+    * `cacheKeyed` persists the keyed table: the join consumes it
+    * several times, and each uncached scan re-runs the blocking-key
+    * explode (double-metaphone + minhash per row — the expensive
+    * part). Callers that rebuild per micro-batch pass false and manage
+    * caching themselves (a per-batch CacheManager entry never released
+    * would grow without bound). */
+  def candidatePairsSelf(keyed0: DataFrame, cfg: Config = Config(),
+      cacheKeyed: Boolean = true, earlyFilter: Boolean = false): DataFrame = {
+    val keyed = if (cacheKeyed) keyed0.persist() else keyed0
+    def side(s: String): DataFrame =
+      keyed.withColumnsRenamed(Map("id" -> s"id_$s", "nosuffix" -> s"nos_$s"))
+    blockJoin(side("a"), side("b"), cfg, self = true, earlyFilter).distinct()
+  }
+
+  /** Self-join candidate pairs over blocking keys (the tiered
+    * [[blockJoin]]). Returns
     * (id_a, id_b, pre_a, pre_b, nos_a, nos_b).
     *
     * Everything here is IN-PLAN — no driver-side count()/collect()
@@ -417,12 +427,11 @@ object Pipeline {
     * IncrementalErSpec pins the plan shape and the bit-identity of the
     * edges against [[edgeCandidatesTwoSided]].
     *
-    * Kept deliberately un-salted: increments are bounded by crawl
-    * cadence, and a pathologically hot increment can fall back to
-    * [[candidatePairsTwoSided]]'s 2-D grid for that batch. Runaway
-    * STANDING keys (census > runawayBlockSize) are dropped via a
-    * broadcast anti-join, mirroring the two-sided path's base-side
-    * runaway drop bit-for-bit. */
+    * Cold keys are un-salted (increments are bounded by crawl
+    * cadence); hot increment keys route through [[blockJoin]] — see
+    * [[incrementalPairs]]. Runaway STANDING keys (census >
+    * runawayBlockSize) are dropped via a broadcast anti-join, mirroring
+    * the two-sided path's base-side runaway drop bit-for-bit. */
   def incrementalEdges(spark: SparkSession, standingTable: String,
       main: DataFrame, baseNorm: DataFrame, cfg: Config = Config()): DataFrame =
     // the keyed handle stays persisted: the CacheManager entry is
@@ -444,8 +453,9 @@ object Pipeline {
       cfg: Config = Config()): (DataFrame, DataFrame) = {
     assertStandingBucketed(spark, standingTable)
     val keyedInc = incrementKeyed(main).persist()
-    (scoreCandidates(incrementalCandidatesKeyed(spark, standingTable,
-      keyedInc, main, baseNorm, cfg), cfg), keyedInc)
+    val pairs = incrementalPairs(spark, standingTable, keyedInc, cfg)
+      .observe("graft_incremental_pairs", count(lit(1)).as("pairs_deduped"))
+    (scoreCandidates(attachNames2(pairs, main, baseNorm, cfg), cfg), keyedInc)
   }
 
   /** Runtime plan guard (always on — planning is driver-side and
@@ -478,33 +488,14 @@ object Pipeline {
     withBlockingKeys(main)
       .select(col("key"), col("id").as("id_a"), col("nosuffix").as("nos_a"))
 
-  /** The candidate half of [[incrementalEdges]] — hydrated
-    * (id_a, id_b, pre_a, pre_b, nos_a, nos_b) prefilter-passing pairs
-    * of increment × standing-table rows. Output is bit-identical to
-    * [[edgeCandidatesTwoSided]](main, base) when the standing table
-    * holds `withBlockingKeys(baseNorm)`; only the physical plan
-    * differs (standing side exchange-free). `main` is consumed twice
-    * (key explode + hydration probe) — callers persist it. */
-  def incrementalCandidates(spark: SparkSession, standingTable: String,
-      main: DataFrame, baseNorm: DataFrame, cfg: Config = Config()): DataFrame =
-    incrementalCandidatesKeyed(spark, standingTable, incrementKeyed(main),
-      main, baseNorm, cfg)
-
-  /** [[incrementalCandidates]] over a caller-supplied (typically
-    * persisted) increment-keyed table from [[incrementKeyed]]. */
-  def incrementalCandidatesKeyed(spark: SparkSession, standingTable: String,
-      keyedInc: DataFrame, main: DataFrame, baseNorm: DataFrame,
-      cfg: Config = Config()): DataFrame =
-    attachNames2(
-      incrementalPairs(spark, standingTable, keyedInc, cfg)
-        .observe("graft_incremental_pairs",
-          count(lit(1)).as("pairs_deduped")),
-      main, baseNorm, cfg)
-
   /** The raw deduped (id_a = increment id, id_b = standing id)
     * prefilter-passing pair set of the incremental blocking join —
     * exposed un-hydrated so the absorb path ([[Absorb]]) can
-    * canonicalize pair order before hydration.
+    * canonicalize pair order before hydration. Hydrated with
+    * [[attachNames2]], it is bit-identical to
+    * [[edgeCandidatesTwoSided]](main, base) when the standing table
+    * holds `withBlockingKeys(baseNorm)`; only the physical plan differs
+    * (standing side exchange-free).
     *
     * `runawayKeys`: standing-census runaways by default (bit-identical
     * to [[candidatePairsTwoSided]]'s base-side drop); the absorb path
@@ -516,133 +507,66 @@ object Pipeline {
     val standing = spark.table(standingTable)
     // runaway census over the bucketed scan: groupBy(key) is satisfied
     // by the table's bucket distribution — no exchange
-    val runaway = runawayKeys.getOrElse(
-      standing.groupBy("key")
-        .agg(count(lit(1)).as("block_size"))
-        .where(col("block_size") > cfg.runawayBlockSize)
-        .select("key"))
+    val runaway = runawayKeys.getOrElse(blockSizes(standing)
+      .where(col("block_size") > cfg.runawayBlockSize).select("key"))
     val b = standing.join(broadcast(runaway), Seq("key"), "left_anti")
       .select(col("key"), col("id").as("id_b"), col("nosuffix").as("nos_b"))
     val a = keyedInc.join(broadcast(runaway), Seq("key"), "left_anti")
-    // hot-increment fallback (closes the "pathologically hot increment
-    // falls back manually" note): a key whose INCREMENT block exceeds
+    // the exchange-free bucket join: only the increment side shuffles
+    def cold(inc: DataFrame): DataFrame =
+      b.join(inc, Seq("key"))
+        .where(gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff))
+        .select("id_a", "id_b")
+    // hot-increment route: a key whose INCREMENT block exceeds
     // maxBlockSize would land its whole |inc_k| × |standing_k| product
     // in one bucket task (the standing factor is runaway-bounded, the
     // increment factor is not). Census the increment driver-side —
     // O(increment) and tiny — and only when hot keys exist, split the
-    // plan: cold keys keep the exchange-free bucket join; hot keys
-    // route through candidatePairsTwoSided's 2-D grid, shuffling only
-    // those keys' standing rows (≤ hot × runawayBlockSize). With no
-    // hot keys (the steady-state norm) the plan is EXACTLY the
-    // single-join one — no second corpus scan, no empty grid branch.
-    val hotKeys = a.groupBy("key").agg(count(lit(1)).as("bs_m"))
-      .where(col("bs_m") > cfg.maxBlockSize)
+    // plan: cold keys keep the bucket join; hot keys go through
+    // blockJoin's grid, shuffling only those keys' standing rows
+    // (≤ hot × runawayBlockSize). With no hot keys (the steady-state
+    // norm) the plan is EXACTLY the single-join one — no second corpus
+    // scan, no empty grid branch.
+    val hotKeys = blockSizes(a).where(col("block_size") > cfg.maxBlockSize)
       .select("key").as[String](org.apache.spark.sql.Encoders.STRING)
       .take(10001)
-    if (hotKeys.isEmpty) {
-      b.join(a, Seq("key"))
-        .where(gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff))
-        .select("id_a", "id_b")
-        .distinct()
-    } else if (hotKeys.length > 10000) {
-      // a batch with >10k hot keys is not an increment in any
-      // meaningful sense — escape to the full two-sided path (corpus
-      // subset shuffles; correct, never a single-task product)
-      System.err.println("[graft-inc] WARNING: batch has >10000 hot " +
-        "keys; routing the whole batch through candidatePairsTwoSided")
-      candidatePairsTwoSided(a, b, cfg, cacheKeyed = false,
-        earlyFilter = true)
-    } else {
-      System.err.println(s"[graft-inc] ${hotKeys.length} hot increment " +
-        s"keys (> ${cfg.maxBlockSize} rows); 2-D-grid scoring them " +
-        "against their standing rows")
-      val hot = broadcast(
-        spark.createDataset(hotKeys.toSeq)(
-          org.apache.spark.sql.Encoders.STRING).toDF("key"))
-      val cold = b.join(a.join(hot, Seq("key"), "left_anti"), Seq("key"))
-        .where(gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff))
-        .select("id_a", "id_b")
-      val gridded = candidatePairsTwoSided(
-        a.join(hot, Seq("key"), "left_semi"),
-        b.join(hot, Seq("key"), "left_semi"),
-        cfg, cacheKeyed = false, earlyFilter = true,
-        // the union's terminal distinct below dedups BOTH branches —
-        // a second distinct inside the grid path would stack a full
-        // extra exchange+agg over ~90% of the pair volume
-        dedup = false)
-      cold.unionByName(gridded).distinct()
-    }
+    val pairs =
+      if (hotKeys.isEmpty) cold(a)
+      else if (hotKeys.length > 10000) {
+        // a batch with >10k hot keys is not an increment in any
+        // meaningful sense — the whole batch takes the blocking join
+        // (corpus subset shuffles; correct, never a single-task product)
+        System.err.println("[graft-inc] WARNING: batch has >10000 hot " +
+          "keys; routing the whole batch through the two-sided block join")
+        blockJoin(a, b, cfg, self = false, earlyFilter = true)
+      } else {
+        System.err.println(s"[graft-inc] ${hotKeys.length} hot increment " +
+          s"keys (> ${cfg.maxBlockSize} rows); 2-D-grid scoring them " +
+          "against their standing rows")
+        val hot = broadcast(
+          spark.createDataset(hotKeys.toSeq)(
+            org.apache.spark.sql.Encoders.STRING).toDF("key"))
+        cold(a.join(hot, Seq("key"), "left_anti")).unionByName(blockJoin(
+          a.join(hot, Seq("key"), "left_semi"),
+          b.join(hot, Seq("key"), "left_semi"),
+          cfg, self = false, earlyFilter = true))
+      }
+    pairs.distinct()
   }
 
-  /** Distinct (id_a, id_b) main × base pairs from two keyed tables —
-    * census on BOTH sides (at web scale the MAIN side is the huge
-    * mention table, so main-hot keys are the norm, not the exception;
-    * a base-only census would land a hot main key's whole
-    * |main_k|×|base_k| product in one task).
-    *
-    * Tiers per key:
-    *  - both sides ≤ maxBlockSize: plain SHUFFLE_HASH join;
-    *  - either side hot (and base ≤ runawayBlockSize): 2-D GRID SALT —
-    *    main rows carry salt_m = hash(id_a) mod nm and are replicated
-    *    to every salt_b; base rows carry salt_b = hash(id_b) mod nb
-    *    and are replicated to every salt_m; the join runs on
-    *    (key, salt_m, salt_b), so each pair meets exactly once at
-    *    (salt_m(a), salt_b(b)) and per-task work is bounded by
-    *    maxBlockSize² regardless of EITHER side's block size.
-    *    Replication cost is main×nb + base×nm rows — linear in each
-    *    side, never quadratic;
-    *  - base > runawayBlockSize: dropped, counted, logged (a universe
-    *    block that big is a stop-word-like artifact; the main side has
-    *    no runaway bound — big main keys are real data). */
+  /** Distinct (id_a, id_b) main × base pairs of two keyed tables
+    * (key, id_a[, nos_a]) and (key, id_b[, nos_b]): [[blockJoin]] in
+    * two-sided mode, deduped. The census covers BOTH sides — at web
+    * scale the MAIN side is the huge mention table, so main-hot keys
+    * are the norm, and a base-only census would land a hot main key's
+    * whole |main_k|×|base_k| product in one task. `cacheKeyed`: see
+    * [[candidatePairsSelf]]. */
   def candidatePairsTwoSided(keyedM0: DataFrame, keyedB0: DataFrame,
       cfg: Config = Config(), cacheKeyed: Boolean = true,
-      earlyFilter: Boolean = false, dedup: Boolean = true): DataFrame = {
-    // see candidatePairsSelf: the keyed sides are multiply consumed
-    // (census + small join + hot join on each side) and every uncached
-    // scan re-runs the blocking_keys explode
+      earlyFilter: Boolean = false): DataFrame = {
     val keyedM = if (cacheKeyed) keyedM0.persist() else keyedM0
     val keyedB = if (cacheKeyed) keyedB0.persist() else keyedB0
-    val cap = cfg.maxBlockSize
-    val sizesB = keyedB.groupBy("key").agg(count(lit(1)).as("bs_b"))
-    val sizesM = keyedM.groupBy("key").agg(count(lit(1)).as("bs_m"))
-    // (key, nm, nb) for keys needing the grid; keys with a runaway
-    // base block are excluded here AND from the small tier → dropped
-    val grid = sizesB.join(sizesM, Seq("key"))
-      .where(col("bs_b") <= cfg.runawayBlockSize &&
-        (col("bs_b") > cap || col("bs_m") > cap))
-      .select(col("key"),
-        ceil(col("bs_m").cast("double") / cap).cast("long").as("nm"),
-        ceil(col("bs_b").cast("double") / cap).cast("long").as("nb"))
-    val oversize = sizesB.where(col("bs_b") > cap).select("key")
-      .unionByName(sizesM.where(col("bs_m") > cap).select("key")).distinct()
-    def gated(pairs: DataFrame): DataFrame =
-      if (earlyFilter)
-        pairs.where(gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff))
-      else pairs
-    val smallPairs = gated(keyedM
-      .join(broadcast(oversize), Seq("key"), "left_anti")
-      .join(keyedB.join(broadcast(oversize), Seq("key"), "left_anti")
-        .hint("SHUFFLE_HASH"), Seq("key")))
-      .select("id_a", "id_b")
-    val hotM = keyedM.join(broadcast(grid), Seq("key"))
-      .select(keyedM.columns.filter(_ != "key").map(col) ++ Seq(col("key"),
-        pmod(xxhash64(col("id_a")), col("nm")).as("salt_m"),
-        explode(sequence(lit(0L), col("nb") - 1)).as("salt_b")): _*)
-    val hotB = keyedB.join(broadcast(grid), Seq("key"))
-      .select(keyedB.columns.filter(_ != "key").map(col) ++ Seq(col("key"),
-        explode(sequence(lit(0L), col("nm") - 1)).as("salt_m"),
-        pmod(xxhash64(col("id_b")), col("nb")).as("salt_b")): _*)
-    val hotPairs = gated(hotM.join(hotB.hint("SHUFFLE_HASH"),
-        Seq("key", "salt_m", "salt_b")))
-      .select("id_a", "id_b")
-      .observe("graft_salted_pairs_2s", count(lit(1)).as("pairs_salted"))
-    // `dedup = false` hands the pair dedup to the CALLER's terminal
-    // distinct (the incremental hot-key route unions this output with
-    // its cold branch and must dedup across the union anyway — two
-    // stacked distincts cost a full extra exchange+agg over the pair
-    // set, 9.2 s of the r7-baseline er_incremental wall; guide §2.4)
-    val u = smallPairs.unionByName(hotPairs)
-    if (dedup) u.distinct() else u
+    blockJoin(keyedM, keyedB, cfg, self = false, earlyFilter).distinct()
   }
 
   /** Prefilter + cascade over candidate pairs → accepted edges with

@@ -126,7 +126,7 @@ object StreamingPipeline {
     * a full corpus re-key + re-shuffle); here the keyed corpus lives
     * ON DISK with its bucket layout, so every micro-batch — including
     * the first after a crash — shuffles only the increment
-    * (Pipeline.incrementalCandidates; IncrementalErSpec pins the
+    * (Pipeline.incrementalPairs; IncrementalErSpec pins the
     * plan). `baseNorm` is still needed for name hydration of accepted
     * pairs; it is cheap to recompute relative to the keyed explode and
     * is persisted for the query lifetime. */

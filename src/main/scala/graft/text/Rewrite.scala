@@ -20,8 +20,9 @@ import java.util.regex.{Matcher, Pattern}
   *
   * Performance (round 7, guide §1.2 "per-task work"): running ~250
   * matchers per name made the normalize stage ~4.8 ms/name. Each rule
-  * now carries a REQUIRED LITERAL — a substring that must occur
-  * (case-insensitively) in the name for the pattern to possibly match,
+  * now carries a REQUIRED LITERAL — a substring that must occur (under
+  * the regex's own case fold, [[Rewrite.fold]]) in the name for the
+  * pattern to possibly match,
   * extracted conservatively from the pattern source (rules where no
   * sound literal exists keep a null guard and always run). A guarded
   * miss skips the matcher allocation and regex scan entirely; the
@@ -34,7 +35,10 @@ import java.util.regex.{Matcher, Pattern}
   * the pattern). Golden parity: the 1180-name normalization fixture
   * suite pins the output bit-for-bit.
   */
-final class Rewrite(rules: Seq[(String, String)]) extends Serializable {
+final class Rewrite private[text] (rules: Seq[(String, String)], guarded: Boolean)
+    extends Serializable {
+
+  def this(rules: Seq[(String, String)]) = this(rules, guarded = true)
 
   private val FLAGS =
     Pattern.CASE_INSENSITIVE | Pattern.UNICODE_CASE | Pattern.UNICODE_CHARACTER_CLASS
@@ -42,7 +46,7 @@ final class Rewrite(rules: Seq[(String, String)]) extends Serializable {
   private final case class Compiled(
       pattern: Pattern,
       replacement: String, // " " + target, already quoted for appendReplacement
-      requiredLit: String, // lowercase literal that must occur, or null
+      requiredLit: String, // folded literal that must occur, or null
       collapse: Pattern,   // null when target is blank
       collapseRepl: String,
       collapseLit: String) // raw target (case-sensitive guard), or null
@@ -56,16 +60,16 @@ final class Rewrite(rules: Seq[(String, String)]) extends Serializable {
         Pattern.compile("""\b""" + target + """\s+""" + target + """\b""")
       else null
     Compiled(p, Matcher.quoteReplacement(" " + target),
-      Rewrite.requiredLiteral(pat), collapse,
+      if (guarded) Rewrite.requiredLiteral(pat) else null, collapse,
       if (collapse != null) Matcher.quoteReplacement(target) else null,
       if (collapse != null) target else null)
   }.toArray
 
   def apply(name0: String): String = {
     var name = name0
-    // lowercase shadow for the case-insensitive literal guards,
-    // recomputed only when a fired rule actually changed the string
-    var ln = name.toLowerCase(Locale.ROOT)
+    // case-folded shadow for the literal guards, recomputed only when
+    // a fired rule actually changed the string
+    var ln = Rewrite.fold(name)
     var i = 0
     while (i < compiled.length) {
       val r = compiled(i)
@@ -80,7 +84,7 @@ final class Rewrite(rules: Seq[(String, String)]) extends Serializable {
       }
       if (r.collapse != null && name.contains(r.collapseLit))
         name = r.collapse.matcher(name).replaceAll(r.collapseRepl)
-      if (name ne prev) ln = name.toLowerCase(Locale.ROOT)
+      if (name ne prev) ln = Rewrite.fold(name)
       i += 1
     }
     name.replace("  ", " ").strip().toLowerCase(Locale.ROOT)
@@ -100,8 +104,8 @@ object Rewrite {
     * '[', braces) or when the best run is shorter than 2 chars. A char
     * immediately followed by a quantifier ('?', '*', '{') is dropped
     * from its run (it may repeat zero times); '+' keeps the char (one
-    * occurrence is required) but ends the run. Lowercased to match the
-    * CASE_INSENSITIVE semantics (guard checks a lowercased name). */
+    * occurrence is required) but ends the run. Folded like the name
+    * shadow it is checked against ([[fold]]). */
   private[text] def requiredLiteral(pat: String): String = {
     if (pat.contains("|") || pat.contains("[") || pat.contains("{")) return null
     val runs = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -138,6 +142,27 @@ object Rewrite {
     }
     endRun()
     val best = runs.sortBy(-_.length).headOption.getOrElse("")
-    if (best.length >= 2) best.toLowerCase(Locale.ROOT) else null
+    if (best.length >= 2) fold(best) else null
+  }
+
+  /** The case fold java.util.regex applies under CASE_INSENSITIVE |
+    * UNICODE_CASE: each code point maps to
+    * `Character.toLowerCase(Character.toUpperCase(cp))`, and two code
+    * points match iff their folds are equal. `String.toLowerCase` is
+    * not that fold: 'ı' (U+0131) and 'ſ' (U+017F) stay put under it
+    * but fold to 'i' and 's', and 'İ' (U+0130) lowercases to two
+    * chars. A guard built on it would skip rules the pattern fires.
+    * Already-folded ASCII is returned as is. */
+  private def fold(s: String): String = {
+    var i = 0
+    while (i < s.length && s.charAt(i) < 128 && !Character.isUpperCase(s.charAt(i)))
+      i += 1
+    if (i == s.length) s
+    else {
+      val sb = new java.lang.StringBuilder(s.length)
+      s.codePoints().forEach(cp =>
+        sb.appendCodePoint(Character.toLowerCase(Character.toUpperCase(cp))))
+      sb.toString
+    }
   }
 }

@@ -63,6 +63,43 @@ class AbsorbSpec extends SparkSuite {
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
+  test("hot increment keys: grid route and salted self tier in one batch plan ≡ one-shot") {
+    // maxBlockSize = 3 makes many increment keys hot, so one batch plan
+    // holds BOTH block joins: incrementalPairs' 2-D grid route
+    // (two-sided) and the increment self-join's salted tier (self) —
+    // their observations must not collide, and the edges and labels
+    // must still match the one-shot path over the union corpus
+    val cfg = Pipeline.Config(maxBlockSize = 3)
+    val n = norm()
+    val oneShot = Pipeline.scoreCandidates(Pipeline.edgeCandidatesSelf(n, cfg), cfg)
+      .select("id_a", "id_b", "code", "score")
+    val oneShotEdges = oneShot.as[(Long, Long, Int, Double)].collect().toSet
+    val oneShotLabels = ConnectedComponents.assignAll(
+      oneShot.select("id_a", "id_b"), n.select("id"))
+      .as[(Long, Long)].collect().toSet
+    def slice(b: Int) = n.where(pmod(col("id"), lit(2)) === b)
+    // the route precondition: the increment has keys above maxBlockSize
+    val hotKeys = Pipeline.incrementKeyed(slice(1)).groupBy("key").count()
+      .where(col("count") > cfg.maxBlockSize).count()
+    assert(hotKeys > 0 && hotKeys <= 10000, s"$hotKeys hot increment keys")
+
+    val table = s"graft_absorb_hot_${System.nanoTime()}"
+    try {
+      val st = Absorb.init(spark, table, 8, tmp("graft_absorb_hot"),
+        slice(0).persist(), cfg)
+      val seedEdges = Pipeline.scoreCandidates(
+          Pipeline.edgeCandidatesSelf(slice(0), cfg), cfg)
+        .select("id_a", "id_b", "code", "score")
+        .as[(Long, Long, Int, Double)].collect().toSet
+      val r = Absorb.absorb(spark, st, slice(1).persist(), cfg, monitor = false)
+      val edges = seedEdges ++ r.newEdges.as[(Long, Long, Int, Double)].collect().toSet
+      assert(edges.nonEmpty && edges == oneShotEdges,
+        s"absorbed edge set diverges: ${(edges diff oneShotEdges).take(3)} extra, " +
+          s"${(oneShotEdges diff edges).take(3)} missing")
+      assert(r.standing.labels.as[(Long, Long)].collect().toSet == oneShotLabels)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
   test("absorbAll ≡ one-shot labels (the er_incremental_clusters contract)") {
     val n = norm()
     val want = ConnectedComponents.assignAll(

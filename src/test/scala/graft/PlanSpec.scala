@@ -102,6 +102,33 @@ class PlanSpec extends SparkSuite {
       s"hydration joins not above the dedup (dedup@$dedupIdx, bcast@$bcastIdxs)")
   }
 
+  test("fused self block join: one key census per consumer, fixed exchange count") {
+    // the self-mode blocking join shares ONE census between its tiers
+    // (the two-sided shape censuses each side and joins them); a second
+    // census — or any new exchange — on the self path is a shuffle
+    // regression on the dense-key workloads. Counts are of the initial
+    // (pre-AQE) plan: 4 census subtrees (the small tier's two sides
+    // and the grid tier's two sides each read the census through a
+    // broadcast), each a partial + final aggregate
+    val m = Pipeline.extractMentions(PagesGen.generate(spark, 50, 4))
+      .select(col("mention_id").as("id"), col("name"))
+    val norm = Pipeline.normalize(m)
+    val keyed = Pipeline.withBlockingKeys(norm).select("id", "key", "nosuffix")
+    val census =
+      """HashAggregate\(keys=\[key#\d+\], functions=\[(partial_)?(count\(1\)|sum\(w)""".r
+    for ((label, df, wantExchanges) <- Seq(
+        ("edgeCandidatesSelf", Pipeline.edgeCandidatesSelf(norm), 19),
+        ("candidatePairsSelf", Pipeline.candidatePairsSelf(keyed, Pipeline.Config(),
+          cacheKeyed = false, earlyFilter = true), 17))) {
+      val p = plan(df)
+      val nExchanges = "Exchange hashpartitioning".r.findAllIn(p).size
+      val nCensus = p.linesIterator.count(l => census.findFirstIn(l).isDefined)
+      assert(nExchanges == wantExchanges,
+        s"$label: $nExchanges hash exchanges, want $wantExchanges:\n$p")
+      assert(nCensus == 8, s"$label: $nCensus key-census aggregates, want 8:\n$p")
+    }
+  }
+
   test("parquet scans push filters and prune columns") {
     val q15 = SparkEntry.queries("q15_ann_range")(spark, "/root/testdata/sf0.001")
     assert(plan(q15).contains("PushedFilters: [In(vec_id"), plan(q15).take(800))
